@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -24,8 +24,6 @@ class ERConfig:
     minhash_seed: int = 0x5A17  # deterministic hash family (north_rule)
 
     # --- blocking ----------------------------------------------------------
-    use_name_blocking: bool = True   # (lang, basename-stem) key family
-    use_lsh_blocking: bool = True    # minhash band key family
     max_block_size: int = 200        # hot-key cap: blocks above this are
                                      # salted into sub-blocks (quadratic
                                      # pair-join guard; drops are logged)
@@ -33,11 +31,8 @@ class ERConfig:
 
     # --- pair scoring -------------------------------------------------------
     match_threshold: float = 0.60    # accept pair iff score >= threshold
-    sha_equal_shortcut: bool = True  # identical sha256 ⇒ match (exact dups)
 
     # --- clustering ----------------------------------------------------------
-    cc_max_iterations: int = 20      # hash-min CC bound (~cluster diameter)
-    cc_checkpoint_every: int = 3     # truncate lineage every k iterations
     cc_local_threshold: int = 100_000  # <= this many match edges → run
                                      # union-find on the driver (a few MB;
                                      # the iterative hash-min machinery
@@ -48,8 +43,6 @@ class ERConfig:
                                      # always takes that path.
 
     # --- execution ------------------------------------------------------------
-    pair_repartition: int | None = None  # override shuffle width for the
-                                         # block self-join (None → session)
     broadcast_payload: bool = True       # broadcast the per-record pair
                                          # payload into the feature joins
                                          # (disable at >~1e9 records and

@@ -854,61 +854,3 @@ def aggregation_batch(
         if bold_count:
             out[i] = bold_count / (agg_count**power + bold_count)
     return out
-
-
-# ---------------------------------------------------------------------------
-# X17 — weighted anchor edit-distance aggregates
-# (AnnotationFeaturePack.java:135-178)
-# ---------------------------------------------------------------------------
-
-def ed_anchors_weight_sqrt(
-    segment: str, anchor_and_occurrences: Sequence[tuple[str, int]]
-) -> float:
-    """sum(sqrt(occ)*NED(segment.lower(), anchor)) / sum(sqrt(occ))
-    (AnnotationFeaturePack.edAnchorsWeightSqrt, :135-144)."""
-    num = 0.0
-    den = 0.0
-    for anchor, occ in anchor_and_occurrences:
-        w = occ ** 0.5
-        num += w * norm_edit_distance(segment.lower(), anchor)
-        den += w
-    return num / den if den else 1.0
-
-
-def ed_anchors_weight_sqrt_comm(
-    segment: str, anchor_and_commonness: Sequence[tuple[str, float]]
-) -> float:
-    """Same shape with sqrt(commonness) weights
-    (AnnotationFeaturePack.edAnchorsWeightSqrtComm, :146-154); missing
-    entity -> commonness 1.0 handled by the caller."""
-    num = 0.0
-    den = 0.0
-    for anchor, comm in anchor_and_commonness:
-        w = comm ** 0.5
-        num += w * norm_edit_distance(segment.lower(), anchor)
-        den += w
-    return num / den if den else 1.0
-
-
-def min_ed_anchors_weight_sqrt_geom(
-    segment: str, anchor_and_occurrences: Sequence[tuple[str, int]],
-    smooth: float,
-) -> float:
-    """Weighted geometric mean of smooth+minED with sqrt(occ) weights
-    (AnnotationFeaturePack.minEdAnchorsWeightSqrtGeom, :156-166)."""
-    vals = [smooth + min_edit_dist(segment.lower(), a)
-            for a, _ in anchor_and_occurrences]
-    weights = [occ ** 0.5 for _, occ in anchor_and_occurrences]
-    return weighted_geometric_average(vals, weights)
-
-
-def ed_anchors_weight_sqrt_geom(
-    segment: str, anchor_and_occurrences: Sequence[tuple[str, int]],
-    smooth: float,
-) -> float:
-    """Weighted geometric mean of smooth+NED-LC with sqrt(occ) weights
-    (AnnotationFeaturePack.edAnchorsWeightSqrtGeom, :168-178)."""
-    vals = [smooth + norm_edit_distance_lc(segment.lower(), a)
-            for a, _ in anchor_and_occurrences]
-    weights = [occ ** 0.5 for _, occ in anchor_and_occurrences]
-    return weighted_geometric_average(vals, weights)

@@ -32,32 +32,25 @@ def generate_blocks(normalized: DataFrame, cfg: ERConfig) -> DataFrame:
     One row per (record, key). Key families unioned and deduplicated
     (ref: candidate-set union J1, QueryInformation.allCandidates).
     """
-    keys = []
-    if cfg.use_name_blocking:
-        keys.append(
-            F.array(F.concat(F.lit("N:"), F.col("lang"), F.lit(":"), F.col("name")))
-        )
-    if cfg.use_lsh_blocking:
-        # tag each band key with its band index so bands don't collide;
-        # empty/null content gets NO LSH keys (all empty files would
-        # otherwise share one sentinel minhash and form a single
-        # quadratic block — exact dups are still caught by the name
-        # family + sha shortcut)
-        zipped = F.zip_with(
-            F.col("bands"),
-            F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
-            lambda h, i: F.concat(
-                F.lit("L:"), i.cast("string"), F.lit(":"), h.cast("string")
-            ),
-        )
-        keys.append(
-            F.when(F.coalesce(F.col("n_chars"), F.lit(0)) > 0, zipped).otherwise(
-                F.array().cast("array<string>")
-            )
-        )
-    if not keys:
-        raise ValueError("at least one blocking family must be enabled")
-    all_keys = keys[0] if len(keys) == 1 else F.concat(*keys)
+    name_key = F.array(
+        F.concat(F.lit("N:"), F.col("lang"), F.lit(":"), F.col("name"))
+    )
+    # tag each band key with its band index so bands don't collide;
+    # empty/null content gets NO LSH keys (all empty files would
+    # otherwise share one sentinel minhash and form a single quadratic
+    # block — exact dups are still caught by the name family + sha
+    # shortcut)
+    zipped = F.zip_with(
+        F.col("bands"),
+        F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
+        lambda h, i: F.concat(
+            F.lit("L:"), i.cast("string"), F.lit(":"), h.cast("string")
+        ),
+    )
+    band_keys = F.when(
+        F.coalesce(F.col("n_chars"), F.lit(0)) > 0, zipped
+    ).otherwise(F.array().cast("array<string>"))
+    all_keys = F.concat(name_key, band_keys)
     # No dropDuplicates (round-6): the key families are disjoint by
     # construction — the name key is "N:"-prefixed and unique per
     # record, each LSH band key carries its band index ("L:<i>:") so

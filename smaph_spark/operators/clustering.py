@@ -5,7 +5,7 @@ from accepted candidates (GreedyLinkback.java:49-87 iterates argmax +
 overlap removal). In the ER recast this is transitive closure of
 accepted match pairs: iterative hash-min label propagation via
 DataFrame self-joins (SURVEY §4 item 2), with ``localCheckpoint`` every
-``cc_checkpoint_every`` iterations to truncate lineage, convergence
+``CC_CHECKPOINT_EVERY`` iterations to truncate lineage, convergence
 detected when no label changes. Cluster id = min record_id of the
 component (deterministic).
 
@@ -20,7 +20,7 @@ corpus (913k token-band edges, 101 components) that cost 8-10
 iterations x ~12.5 task-seconds each (measured; see
 OPTIMIZATION_r06.md) where the contracted loop pays ~1.3x the first
 round. Iteration count stays O(log component diameter) on chains
-(pointer jumping), bounded by ``cc_max_iterations`` with a warning.
+(pointer jumping), bounded by ``CC_MAX_ITERATIONS`` with a warning.
 When the contracted edge set falls under ``cc_local_threshold`` the
 round finishes with the driver union-find over the (tiny) supernode
 graph — the same documented bound as the all-local fast path, never
@@ -34,6 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
+
+#: hash-min CC round bound (~log cluster diameter with pointer jumping)
+CC_MAX_ITERATIONS = 20
+#: truncate the label lineage every k rounds
+CC_CHECKPOINT_EVERY = 3
 
 
 def history_pseudo_edges(history_clusters: DataFrame) -> DataFrame:
@@ -99,7 +104,7 @@ def connected_components(
     history: list[dict] = []
     e_count = E.count()
     labels_checkpointed = True
-    for it in range(cfg.cc_max_iterations):
+    for it in range(CC_MAX_ITERATIONS):
         if e_count == 0:
             break
         if 0 < e_count <= cfg.cc_local_threshold:
@@ -189,7 +194,7 @@ def connected_components(
             )
         )
         labels_checkpointed = False
-        if (it + 1) % cfg.cc_checkpoint_every == 0:
+        if (it + 1) % CC_CHECKPOINT_EVERY == 0:
             labels = labels.localCheckpoint(eager=True)
             labels_checkpointed = True
         # contract: rewrite edges onto the new labels, drop self-loops
@@ -217,12 +222,12 @@ def connected_components(
         labels = labels.localCheckpoint(eager=True)
     if e_count != 0:
         # a component needing more contraction rounds than
-        # cc_max_iterations would be silently split — surface it
+        # CC_MAX_ITERATIONS would be silently split — surface it
         # (ADVICE round 1)
         import warnings
 
         warnings.warn(
-            f"hash-min CC did not converge in {cfg.cc_max_iterations} "
+            f"hash-min CC did not converge in {CC_MAX_ITERATIONS} "
             f"iterations ({e_count} contracted edges remain); clusters "
             "may be split",
             RuntimeWarning,

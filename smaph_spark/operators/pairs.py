@@ -10,11 +10,11 @@ Feature pack mirrors the reference's fixed-schema discipline
 (EntityFeaturePack.java:33-74 — static feature-name array, checked):
 FEATURE_COLS is the single source of truth for the scorer schema.
 
-JVM-vs-Python split: the minhash Jaccard estimate, size ratios, lang
-and sha equality are pure `pyspark.sql.functions` (whole-stage
-codegen); only the two string-edit kernels (Jaro-Winkler on names,
-normalized Levenshtein on paths) cross into Arrow-batched numpy
-(functions/kernels.py, batch-vectorized DP).
+JVM-vs-Python split: size ratios, lang and sha equality are pure
+`pyspark.sql.functions` (whole-stage codegen); the minhash Jaccard
+estimate and the two string-edit kernels (Jaro-Winkler on names,
+normalized Levenshtein on paths) cross into one Arrow-batched numpy
+UDF (functions/kernels.py, batch-vectorized DP).
 """
 
 from __future__ import annotations
@@ -41,20 +41,9 @@ FEATURE_COLS = [
 
 
 @F.pandas_udf(T.DoubleType())
-def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(K.jaro_winkler_batch(a.to_numpy(), b.to_numpy()))
-
-
-@F.pandas_udf(T.DoubleType())
-def _ned_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(K.norm_edit_distance_batch(a.to_numpy(), b.to_numpy()))
-
-
-@F.pandas_udf(T.DoubleType())
 def _minhash_agree_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Positional minhash agreement via numpy (used where the arrays
-    are already Python-side). For the hot pair path use
-    :func:`minhash_agreement_col` instead — it never leaves the JVM."""
+    """Positional minhash agreement via numpy (ops.dedup's MinHash pair
+    estimate; the ER pair path computes it inside _pair_kernel_udf)."""
     A = np.stack(a.to_numpy())
     B = np.stack(b.to_numpy())
     return pd.Series((A == B).mean(axis=1))
@@ -91,23 +80,6 @@ def _pair_kernel_udf(
                 l_path.to_numpy(), r_path.to_numpy()
             ),
         }
-    )
-
-
-def minhash_agreement_col(l: str, r: str):
-    """Minhash agreement rate as a pure JVM column expression:
-    |array_intersect| / |array|. For minhash signatures, shared values
-    across DIFFERENT permutation slots are ~impossible (64-bit values),
-    so set intersection equals positional agreement w.h.p. — and the
-    arrays stay inside whole-stage codegen instead of crossing Arrow
-    (20 GB of signature traffic at 10M pairs measured as the pair-stage
-    bottleneck)."""
-    return F.coalesce(
-        F.try_divide(
-            F.size(F.array_intersect(F.col(l), F.col(r))).cast("double"),
-            F.size(F.col(l)).cast("double"),
-        ),
-        F.lit(0.0),
     )
 
 

@@ -31,15 +31,13 @@ _RULE_WEIGHTS = {
 }
 
 
-def rule_score(pairs_feat: DataFrame, cfg: ERConfig) -> DataFrame:
+def rule_score(pairs_feat: DataFrame) -> DataFrame:
     """Deterministic weighted score in [0,1] (+ sha shortcut)."""
     expr = None
     for c, w in _RULE_WEIGHTS.items():
         term = F.col(c) * F.lit(w)
         expr = term if expr is None else expr + term
-    score = F.when(
-        (F.col("sha_eq") == 1.0) & F.lit(cfg.sha_equal_shortcut), F.lit(1.0)
-    ).otherwise(expr)
+    score = F.when(F.col("sha_eq") == 1.0, F.lit(1.0)).otherwise(expr)
     return pairs_feat.withColumn("score", score.cast("double"))
 
 

@@ -93,11 +93,11 @@ def documents_as_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RESULT_CACHE: dict[str, tuple] = {}
 
 
-def run_document_er(spark: SparkSession, sf_dir: str, use_cache: bool = True):
+def run_document_er(spark: SparkSession, sf_dir: str):
     # key by (application, sf_dir): cached DataFrames die with their
     # SparkContext, so a new session must not see a stale entry
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if use_cache and key in _RESULT_CACHE:
+    if key in _RESULT_CACHE:
         return _RESULT_CACHE[key]
     files = documents_as_files(spark, sf_dir)
     model, threshold = get_document_scorer(spark)
@@ -107,8 +107,7 @@ def run_document_er(spark: SparkSession, sf_dir: str, use_cache: bool = True):
     id_map = files.select(
         F.xxhash64("repo", "path", "commit").alias("record_id"), "doc_id"
     )
-    if use_cache:
-        _RESULT_CACHE[key] = (res, id_map)
+    _RESULT_CACHE[key] = (res, id_map)
     return res, id_map
 
 
@@ -459,7 +458,7 @@ def er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     via hash-min CC; (2) only delta-touching edges are generated for
     the fold (O(delta), `_tokenband_delta_pairs`); (3) history
     clusters re-enter CC as pseudo-edges — `history_pseudo_edges`,
-    the same production fold `run_incremental._clusters` uses. Because
+    the same production fold `ERPipeline.run_incremental` uses. Because
     the pseudo-edges preserve history connectivity exactly, the final
     components equal a batch run over the full edge set, which is what
     the DuckDB recursive CTE recomputes — any membership regression in

@@ -4,14 +4,23 @@ Query-lifecycle mapping (SURVEY §3.1 "Spark lifecycle equivalent"):
 stage 1 narrow fingerprinting (Arrow UDF) → stage 2 explode block keys
 + shuffle on block_key (salted) → stage 3 block-local self-join + pair
 features → stage 4 threshold filter → stage 5 checkpointed hash-min CC
-→ clusters sink.
+→ clusters sink. Stages 2-5 exist once (``ERPipeline._resolve``):
+``run`` is stage 1 plus that sequence, and ``run_incremental`` feeds
+it the history ∪ delta records, the delta ids every scored pair must
+touch and the history clustering as CC pseudo-edges.
 
 Resumability (north_rule): when ``checkpoint_dir`` is set, every stage
-writes a parquet snapshot + ``_metrics.json`` (row counts, elapsed,
-per-partition row counts, top-k skew keys). A re-run with the same
-config fingerprint reads the snapshot instead of recomputing; the
-per-row invariant sha256(content) is verified against the source table
-after every stage that carries content columns.
+writes a parquet snapshot + ``_metrics.json`` (row count, elapsed). A
+re-run with the same config fingerprint reads the snapshot instead of
+recomputing; the per-row invariant sha256(content) is verified against
+the source table after every stage that carries content columns.
+
+Timings: a stage's ``elapsed_sec`` is recorded only when its snapshot
+write executes the stage. Without ``checkpoint_dir`` each stage is
+persisted lazily and runs inside whichever later action first needs
+it, so no per-stage time is reported. Per-layer timings come from the
+benchmark's traced run (``python3 perfbench/run.py --trace 1``), which
+materializes every layer inside its own Spark job-group window.
 """
 
 from __future__ import annotations
@@ -46,14 +55,11 @@ class PipelineResult:
     stage_metrics: dict = field(default_factory=dict)
 
 
-def _partition_histogram(df: DataFrame) -> list[int]:
-    return [
-        int(r["n"])
-        for r in df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("pid")
-        .collect()
-    ]
+def _normalize(files: DataFrame, cfg: ERConfig) -> DataFrame:
+    # content is consumed entirely inside stage 1 (sha + minhash);
+    # carrying the ~KB content column through persist/snapshot and the
+    # pair joins is pure bandwidth waste at scale
+    return normalize_files(files, cfg).drop("content")
 
 
 class ERPipeline:
@@ -65,13 +71,11 @@ class ERPipeline:
         cfg: ERConfig | None = None,
         checkpoint_dir: str | None = None,
         scorer_model=None,
-        collect_partition_metrics: bool = False,
     ):
         self.spark = spark
         self.cfg = cfg or ERConfig()
         self.checkpoint_dir = checkpoint_dir
         self.scorer_model = scorer_model
-        self.collect_partition_metrics = collect_partition_metrics
         self._metrics: dict = {}
         # scorer identity keys the snapshots too: a retrained model with
         # a coincidentally-equal threshold must not resume pair scores
@@ -125,63 +129,69 @@ class ERPipeline:
             basis = f"{plan}|{row['x']}|{row['s']}|{row['n']}"
         return hashlib.sha256(basis.encode()).hexdigest()[:12]
 
-    def _stage_path(self, stage: str) -> str | None:
+    def _stage_path(self, stage: str, run_key: str | None = None) -> str | None:
+        """``run_key`` overrides the run-scoped snapshot directory — used
+        for artifacts shared ACROSS runs (the history normalize output
+        and block-key table are keyed by the history fingerprint alone,
+        so successive delta batches against the same history all reuse
+        one snapshot)."""
         if not self.checkpoint_dir:
             return None
-        return os.path.join(
-            self.checkpoint_dir,
-            f"fp={self.cfg.fingerprint()}-in={self._input_fp}"
-            f"-sc={self._scorer_fp}",
-            stage,
-        )
+        if run_key is None:
+            run_key = (
+                f"fp={self.cfg.fingerprint()}-in={self._input_fp}"
+                f"-sc={self._scorer_fp}"
+            )
+        return os.path.join(self.checkpoint_dir, run_key, stage)
 
-    def _load_or_compute(self, stage: str, compute, path: str | None = None) -> DataFrame:
-        """``path`` overrides the run-scoped snapshot location — used for
-        artifacts shared ACROSS runs (the history block-key table is
-        keyed by the history fingerprint alone, so successive delta
-        batches against the same history all reuse one snapshot)."""
-        if path is None:
-            path = self._stage_path(stage)
-        if path and os.path.exists(os.path.join(path, "_SUCCESS")):
-            self._metrics[stage] = {"resumed_from_snapshot": True, "path": path}
-            return self.spark.read.parquet(path)
-        t0 = time.time()
-        df = compute()
-        if path:
-            df.write.mode("overwrite").parquet(path)
-            df = self.spark.read.parquet(path)
-        else:
+    def _load_or_compute(
+        self, stage: str, compute, run_key: str | None = None
+    ) -> DataFrame:
+        path = self._stage_path(stage, run_key)
+        if not path:
             # no snapshot to re-read from: persist so downstream stages
             # (and the CC iterations) don't re-execute the whole DAG —
             # without this the match join recomputed once per terminal
-            # action, the dominant serial overhead in the bench job
-            df = df.persist()
-        m = {"elapsed_sec": round(time.time() - t0, 3)}
-        if path:
-            m["rows"] = df.count()
-            m["path"] = path
-            if self.collect_partition_metrics:
-                m["partition_rows"] = _partition_histogram(df)
-            with open(os.path.join(path, "_metrics.json"), "w") as fh:
-                json.dump(m, fh)
+            # action, the dominant serial overhead in the bench job.
+            # persist() is lazy: nothing runs here, so nothing is timed
+            return compute().persist()
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            self._metrics[stage] = {"resumed_from_snapshot": True, "path": path}
+            return self.spark.read.parquet(path)
+        t0 = time.time()
+        compute().write.mode("overwrite").parquet(path)
+        m = {"elapsed_sec": round(time.time() - t0, 3), "path": path}
+        df = self.spark.read.parquet(path)
+        m["rows"] = df.count()
+        with open(os.path.join(path, "_metrics.json"), "w") as fh:
+            json.dump(m, fh)
         self._metrics[stage] = m
         return df
 
     # -- stages ----------------------------------------------------------------
-    def run(self, files: DataFrame, gold_pairs: DataFrame | None = None) -> PipelineResult:
-        cfg = self.cfg
+    def run(self, files: DataFrame) -> PipelineResult:
         self._input_fp = self._input_fingerprint(files)
-
-        # content is consumed entirely inside stage 1 (sha + minhash);
-        # carrying the ~KB content column through persist/snapshot and
-        # the pair joins is pure bandwidth waste at scale
         normalized = self._load_or_compute(
-            "s1_normalized", lambda: normalize_files(files, cfg).drop("content")
+            "s1_normalized", lambda: _normalize(files, self.cfg)
         )
+        return self._resolve(normalized, generate_blocks(normalized, self.cfg))
+
+    def _resolve(
+        self,
+        normalized: DataFrame,
+        block_keys: DataFrame,
+        new_ids: DataFrame | None = None,
+        history_edges: DataFrame | None = None,
+    ) -> PipelineResult:
+        """Stages 2-5 — cap/salt, pair + featurize + score, match filter,
+        CC — over ``normalized`` and its raw ``block_keys``. The two
+        incremental inputs: ``new_ids`` (record_id) restricts scoring to
+        pairs touching at least one of them, and ``history_edges`` enter
+        CC next to the matches."""
+        cfg = self.cfg
 
         def _blocks():
-            blocks = generate_blocks(normalized, cfg)
-            salted, block_metrics = cap_and_salt_blocks(blocks, cfg)
+            salted, block_metrics = cap_and_salt_blocks(block_keys, cfg)
             acts = {
                 r["action"]: (int(r["n"]), int(r["records"]))
                 for r in block_metrics.groupBy("action")
@@ -199,10 +209,23 @@ class ERPipeline:
 
         def _pairs():
             pairs = generate_pairs(salted, cfg)
+            if new_ids is not None:
+                l_new = new_ids.select(
+                    F.col("record_id").alias("left_id"), F.lit(True).alias("_nl")
+                )
+                r_new = new_ids.select(
+                    F.col("record_id").alias("right_id"), F.lit(True).alias("_nr")
+                )
+                pairs = (
+                    pairs.join(l_new, "left_id", "left")
+                    .join(r_new, "right_id", "left")
+                    .filter(F.col("_nl") | F.col("_nr"))
+                    .drop("_nl", "_nr")
+                )
             feat = attach_pair_features(pairs, normalized, cfg)
             if self.scorer_model is not None:
                 return gbt_score(self.scorer_model, feat)
-            return rule_score(feat, cfg)
+            return rule_score(feat)
 
         pairs_scored = self._load_or_compute("s3_pairs_scored", _pairs)
 
@@ -212,8 +235,13 @@ class ERPipeline:
         )
 
         def _clusters():
+            edges = matches
+            if history_edges is not None:
+                edges = matches.select("left_id", "right_id").unionByName(
+                    history_edges
+                )
             clusters, history = connected_components(
-                matches, cfg, all_records=normalized
+                edges, cfg, all_records=normalized
             )
             self._metrics["s5_cc_iterations"] = history
             return clusters
@@ -260,28 +288,26 @@ class ERPipeline:
         history-only run had scored (and vice versa). With capping
         effectively disabled (large ``max_block_size``) it is exact.
 
-        Pass ``history_normalized`` (the previous run's ``.normalized``
-        output, or its snapshot) to skip re-normalizing history — then
-        the expensive Arrow minhash/sha pass runs over the DELTA only
-        and every per-record stage is O(|delta|); without it, stage 1
-        re-reads all of history (blocking's key explode + shuffle is
-        over the union either way — at cluster scale that key table is
-        the thing to keep bucketed on disk between runs).
+        Stage 1 and the block-key generation run over the DELTA only.
+        History's normalize output is ``history_normalized`` when given
+        (the previous run's ``.normalized``, or its snapshot); otherwise
+        ``history_files`` is normalized once. History's normalize output
+        and raw block-key table are snapshotted under the HISTORY
+        fingerprint, so every later delta batch against the same
+        history reuses them (at cluster scale the key table is the
+        thing to keep bucketed by block_key on disk between runs).
         """
         cfg = self.cfg
-        # BOTH modes assume history/delta record ids are disjoint (the
-        # union normalize keeps an overlapping record twice, duplicating
-        # its pairs; the O(delta) key union likewise) — verify up front
-        # instead of assuming (round-4 review: the guard must cover the
-        # -inc branch too, not only deltanorm). One narrow semi-join
-        # count, delta ids broadcast. The default scans history_files
-        # once per delta batch, which partially offsets the O(delta)
-        # win on large histories (round-4 ADVICE) — callers that
-        # maintain a history id index (dd07-style digest table, or the
-        # snapshotted s2_history_keys) pass it as ``history_ids``
-        # (DataFrame with record_id), and callers that already
-        # anti-joined the delta against history set
-        # ``skip_overlap_check=True``.
+        # history/delta record ids must be disjoint (an overlapping
+        # record would be normalized and keyed twice, duplicating its
+        # pairs) — verify up front instead of assuming. One narrow
+        # semi-join count, delta ids broadcast. The default scans
+        # history_files once per delta batch, which partially offsets
+        # the O(delta) win on large histories (round-4 ADVICE) —
+        # callers that maintain a history id index (dd07-style digest
+        # table) pass it as ``history_ids`` (DataFrame with record_id),
+        # and callers that already anti-joined the delta against
+        # history set ``skip_overlap_check=True``.
         rid = F.xxhash64("repo", "path", "commit").alias("record_id")
         if not skip_overlap_check:
             hist_ids = (
@@ -300,133 +326,42 @@ class ERPipeline:
                     "history first (e.g. dd07-style digest anti-join) or "
                     "run a full batch"
                 )
-        files = history_files.unionByName(new_files)
-        # the two modes snapshot DIFFERENT things under s1_normalized
-        # (delta-only vs full union) — the mode must be part of the
-        # snapshot key or one mode resumes the other's stage. The
-        # history/delta SPLIT must be in the key too: two runs over the
-        # same union but different splits produce different
-        # s3_pairs_scored (delta-touching pairs only) and, in
-        # -deltanorm mode, different s1_normalized (delta-only rows)
-        mode = "-deltanorm" if history_normalized is not None else "-inc"
-        self._input_fp = (
-            self._input_fingerprint(files)
-            + "-new" + self._input_fingerprint(new_files)
-            + mode
+        # the history/delta SPLIT keys the run's snapshots: two runs over
+        # the same union but different splits produce different
+        # s1_normalized (delta rows) and s3_pairs_scored (delta-touching
+        # pairs only)
+        hist_fp = self._input_fingerprint(history_files)
+        self._input_fp = f"{hist_fp}-new{self._input_fingerprint(new_files)}"
+        hist_key = f"fp={cfg.fingerprint()}-hist={hist_fp}"
+
+        if history_normalized is None:
+            history_normalized = self._load_or_compute(
+                "s1_history_normalized",
+                lambda: _normalize(history_files, cfg),
+                run_key=hist_key,
+            )
+        new_norm = self._load_or_compute(
+            "s1_normalized", lambda: _normalize(new_files, cfg)
         )
-
-        if history_normalized is not None:
-            new_norm = self._load_or_compute(
-                "s1_normalized",
-                lambda: normalize_files(new_files, cfg).drop("content"),
-            )
-            normalized = history_normalized.unionByName(new_norm)
-
-            # O(delta) blocking (round-3 VERDICT item 7): the raw
-            # block-key table is a pure per-record function, so
-            # history's keys are computed ONCE and snapshotted under
-            # the HISTORY fingerprint (shared by every later delta
-            # batch against the same history — at cluster scale this
-            # is the table you keep bucketed by block_key on disk
-            # between runs). Only the delta's keys are generated
-            # fresh; cap/salt counts still see the union, so capping
-            # decisions match the full-batch run exactly.
-            hist_path = None
-            if self.checkpoint_dir:
-                hist_fp = self._input_fingerprint(history_files)
-                hist_path = os.path.join(
-                    self.checkpoint_dir,
-                    f"fp={cfg.fingerprint()}-hist={hist_fp}",
-                    "s2_history_keys",
-                )
-            hist_keys = self._load_or_compute(
-                "s2_history_keys",
-                lambda: generate_blocks(history_normalized, cfg)
-                .repartition("block_key"),
-                path=hist_path,
-            )
-
-            def _blocks():
-                # (history/delta disjointness already verified at entry,
-                # so the per-side dedup covers the union)
-                delta_keys = generate_blocks(new_norm, cfg)
-                self._metrics["s2_delta_key_rows"] = delta_keys.count()
-                blocks = hist_keys.unionByName(delta_keys)
-                salted, _ = cap_and_salt_blocks(blocks, cfg)
-                return salted
-
-        else:
-            normalized = self._load_or_compute(
-                "s1_normalized",
-                lambda: normalize_files(files, cfg).drop("content"),
-            )
-
-            def _blocks():
-                blocks = generate_blocks(normalized, cfg)
-                salted, _ = cap_and_salt_blocks(blocks, cfg)
-                return salted
-
-        salted = self._load_or_compute("s2_blocks", _blocks)
-
-        new_ids = new_files.select(
-            F.xxhash64("repo", "path", "commit").alias("record_id"),
-            F.lit(True).alias("_new"),
-        ).distinct()
-
-        def _pairs():
-            pairs = generate_pairs(salted, cfg)
-            flagged = (
-                pairs.join(
-                    new_ids.withColumnRenamed("record_id", "left_id")
-                    .withColumnRenamed("_new", "_new_l"),
-                    "left_id", "left",
-                )
-                .join(
-                    new_ids.withColumnRenamed("record_id", "right_id")
-                    .withColumnRenamed("_new", "_new_r"),
-                    "right_id", "left",
-                )
-                .filter(F.col("_new_l") | F.col("_new_r"))
-                .drop("_new_l", "_new_r")
-            )
-            feat = attach_pair_features(flagged, normalized, cfg)
-            if self.scorer_model is not None:
-                return gbt_score(self.scorer_model, feat)
-            return rule_score(feat, cfg)
-
-        pairs_scored = self._load_or_compute("s3_pairs_scored", _pairs)
-
-        matches = self._load_or_compute(
-            "s4_matches",
-            lambda: filter_matches(pairs_scored, cfg).filter(F.col("is_match")),
+        hist_keys = self._load_or_compute(
+            "s2_history_keys",
+            lambda: generate_blocks(history_normalized, cfg)
+            .repartition("block_key"),
+            run_key=hist_key,
         )
-
-        def _clusters():
-            # history cluster memberships ride into CC as pseudo-edges;
-            # canonicalized (min, max) like every match pair
-            old_edges = history_pseudo_edges(history_clusters)
-            edges = matches.select("left_id", "right_id").unionByName(old_edges)
-            clusters, history = connected_components(
-                edges, cfg, all_records=normalized
-            )
-            self._metrics["s5_cc_iterations"] = history
-            return clusters
-
-        clusters = self._load_or_compute("s5_clusters", _clusters)
-
-        return PipelineResult(
-            normalized=normalized,
-            blocks=salted,
-            pairs_scored=pairs_scored,
-            matches=matches,
-            clusters=clusters,
-            stage_metrics=dict(self._metrics),
+        delta_keys = generate_blocks(new_norm, cfg)
+        self._metrics["s2_delta_key_rows"] = delta_keys.count()
+        # cap/salt counts see the union, so capping decisions match the
+        # full-batch run exactly
+        return self._resolve(
+            history_normalized.unionByName(new_norm),
+            hist_keys.unionByName(delta_keys),
+            new_ids=new_norm.select("record_id").distinct(),
+            history_edges=history_pseudo_edges(history_clusters),
         )
 
     def stage_metrics_resumed(self) -> bool:
         """True iff every snapshot-backed stage was read from disk."""
-        stages = [k for k in self._metrics if k.startswith("s") and k[1].isdigit()
-                  and "_" in k and k.split("_")[0][1:].isdigit()]
         snapshot_stages = [
             k for k in ("s1_normalized", "s2_blocks", "s3_pairs_scored",
                          "s4_matches", "s5_clusters") if k in self._metrics

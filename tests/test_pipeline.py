@@ -137,6 +137,35 @@ def test_block_cap_metrics_logged(spark):
     pipe.run(files)
     caps = pipe._metrics["s2_block_caps"]
     assert caps["salted_blocks"] + caps["dropped_blocks"] > 0
+    # the incremental path caps the same history ∪ delta key table, so
+    # it must report the same counts
+    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
+    history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
+    hist_res = ERPipeline(spark, cfg).run(history)
+    inc = ERPipeline(spark, cfg)
+    inc.run_incremental(history, delta, hist_res.clusters)
+    assert inc._metrics["s2_block_caps"] == caps
+
+
+def test_every_config_field_is_read():
+    """An ERConfig field nothing reads is a knob that changes nothing
+    but the snapshot fingerprint: every field must be read as an
+    attribute somewhere in smaph_spark/ outside config.py."""
+    import ast
+    import dataclasses
+    import pathlib
+
+    import smaph_spark
+
+    fields = {f.name for f in dataclasses.fields(ERConfig)}
+    read = set()
+    for path in pathlib.Path(smaph_spark.__file__).parent.rglob("*.py"):
+        if path.name == "config.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    assert fields - read == set()
 
 
 def test_cc_local_and_distributed_paths_agree(spark):
@@ -199,7 +228,7 @@ def test_input_fingerprint_duplicates_do_not_cancel(spark):
 def test_cc_long_chain_converges_within_log_iterations(spark):
     """Pointer jumping must label a chain FAR longer than the iteration
     cap: a 300-hop path converges in O(log d) iterations, where plain
-    neighbour propagation would need 300 (> cc_max_iterations=20) and
+    neighbour propagation would need 300 (> CC_MAX_ITERATIONS=20) and
     silently split the component."""
     import warnings
     from dataclasses import replace
@@ -290,9 +319,10 @@ def test_incremental_er_with_history_normalized(spark):
 
 
 def test_incremental_modes_do_not_share_snapshots(spark, tmp_path):
-    """With checkpoint_dir set, the delta-only-normalize mode and the
-    full-union mode must not resume each other's s1 snapshot (they
-    cache different contents under the same stage name)."""
+    """With checkpoint_dir set, a run that normalizes history itself
+    and a run handed history_normalized may resume each other's
+    snapshots only because both cache the same contents: s1_normalized
+    holds the delta alone, so neither run duplicates history."""
     files_pdf, _, _ = generate_files_corpus(n_clusters=30, seed=9001)
     files = spark.createDataFrame(files_pdf)
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
@@ -301,10 +331,10 @@ def test_incremental_modes_do_not_share_snapshots(spark, tmp_path):
     ckpt = str(tmp_path)
     n_total = files.count()
 
-    # union mode first: snapshots full-union normalization
+    # first run normalizes history itself (snapshotted per history)
     p1 = ERPipeline(spark, ERConfig(), checkpoint_dir=ckpt)
     r1 = p1.run_incremental(history, delta, hist_res.clusters)
-    # delta mode second: must NOT load the union snapshot as "delta"
+    # second run is handed history's normalize output
     p2 = ERPipeline(spark, ERConfig(), checkpoint_dir=ckpt)
     r2 = p2.run_incremental(
         history, delta, hist_res.clusters,
@@ -432,9 +462,9 @@ def test_incremental_rejects_history_delta_overlap(spark):
 
 
 def test_incremental_rejects_overlap_in_both_modes(spark):
-    """Round-4 review: the overlap guard must cover the -inc branch
-    (no history_normalized) too, where union normalization would
-    silently duplicate the overlapping record's pairs."""
+    """Round-4 review: the overlap guard must hold without
+    history_normalized too, where the overlapping record would be
+    normalized twice and its pairs duplicated."""
     files_pdf, _, _ = generate_files_corpus(n_clusters=15, seed=717)
     files = spark.createDataFrame(files_pdf)
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
